@@ -23,6 +23,7 @@ import sqlite3
 
 from codebased_spark.functions.fts5 import quote_fts_query
 from codebased_spark.oracle import Fts5Oracle
+from tests.parity import assert_rank_identical
 
 _BRANCH_SQL = {
     True: "select rowid, rank from fts where name match :q order by rank limit :n",
@@ -116,32 +117,13 @@ class Oracle:
         return [(self.keys[r], nm, -rank) for r, (nm, rank) in best]
 
 
-def _groups(rows):
-    out = []
-    for key, nm, score in rows:
-        k = (nm, round(score, 9))
-        if out and out[-1][0] == k:
-            out[-1][1].add(key)
-        else:
-            out.append([k, {key}])
-    return out
-
-
 def rank_identical(ours: list[tuple], want: list[tuple], top_k: int) -> bool:
-    """ours/want: [((repo, path), name_match, score)] best-first. The
-    rule of tests/parity.py, returning a verdict instead of asserting so
-    that it still checks under ``python -O``."""
-    if len(ours) != len(want):
+    """ours/want: [((repo, path), name_match, score)] best-first, compared
+    with the parity suite's rule."""
+    try:
+        assert_rank_identical(ours, want, top_k)
+    except AssertionError:
         return False
-    go, gw = _groups(ours), _groups(want)
-    if [k for k, _ in go] != [k for k, _ in gw]:
-        return False
-    seen = 0
-    for (_, a), (_, b) in zip(go, gw):
-        seen += len(a)
-        at_boundary = seen == len(ours) and len(ours) == top_k
-        if not at_boundary and a != b:
-            return False
     return True
 
 

@@ -90,6 +90,17 @@ def make_corpus(shape: dict, seed: int) -> dict:
 
 # Query kinds per cycle of 20 queries, shuffled within each cycle, so
 # every stretch of the stream has the same mix.
+#
+# The traffic shape is an assumption, not a measured query log: no public
+# code-search log was at hand. Fixed by design are the kinds, the six
+# reference shapes, the 10% of absent phrases and the never-repeating
+# strings. Chosen by judgment are the 2/3/13 split of the other kinds, the
+# words per phrase and phrases per query (1-3 each, weighted in
+# QueryStream), the 20% quoting of one-word phrases and the Zipf(0.8) skew
+# over a 2000-file pool. They set how often presence pruning and the
+# phrase-df fast path fire, so search_p50_s, search_tail_s and batch_qps
+# depend on them, as do the per-layer presence.*, phrasedf.covered_frac
+# and query.row_groups_overlap_frac.
 KIND_CYCLE = ["reference"] * 2 + ["absent"] * 2 + ["path"] * 3 + ["phrases"] * 13
 
 
@@ -114,8 +125,8 @@ class QueryStream:
             if runs:
                 pool.append(runs)
         self.pool = pool
-        # Zipf(0.8) over pool rank: phrases of a few files recur often,
-        # while no single file dominates the stream's cost
+        # Zipf(0.8) over pool rank (an assumed skew): phrases of a few
+        # files recur often, while no single file dominates the stream's cost
         self.weights = [1.0 / (r + 1) ** 0.8 for r in range(len(pool))]
         self.paths = corpus["path"]
         self.used: set[str] = set()

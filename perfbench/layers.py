@@ -342,11 +342,6 @@ def per_layer(*, spark, sess, index, read_index, idx_dir, corpus, corpus_df, spe
 
     p_traced, p_plain = _median(traced_lat), _median(plain_lat)
     put("trace.overhead_frac", p_traced / p_plain - 1.0 if p_plain else 0.0, "ratio")
-    calls = tracer.durations("query.search_call")
-    collects = tracer.durations("query.collect")
-    whole = tracer.durations("query.search")
-    put("trace.search_covered_frac",
-        (sum(calls) + sum(collects)) / sum(whole) if whole else 0.0, "ratio")
     put("trace.commit_covered_frac",
         _median([sum(r.values()) / w for r, w in zip(stage_rows, commit_wall)]), "ratio")
     m["_failed"] = failed

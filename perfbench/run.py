@@ -7,8 +7,8 @@ corpus into a fresh index (``build_index``), sets up a session several
 times (session start + index open + warm-up), then serves a seeded query
 stream for ``--seconds`` with one client (``search``/``search_batch``,
 one request at a time), and finally applies a fixed number of commits
-(``incremental_update``), each followed by a freshness search, a no-op
-re-commit and two stream searches. Every timed result is checked
+(``incremental_update``), each followed by a freshness search, no-op
+re-commits and two stream searches. Every timed result is checked
 against the SQLite FTS5 oracle outside the timed windows.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` records spans
@@ -16,7 +16,7 @@ around the calls into each layer and prints the per-layer metrics. The
 last line of stdout is one JSON object: correct, attempted, failed,
 metrics. Context (host probes, session sizing, sample counts) goes to
 the lines before it. Exits 1 when any result is wrong, 2 when the
-engine cannot be imported.
+engine cannot be imported or assertions are off (``-O``).
 
 Workloads and the metric-to-layer map are described in README.md.
 """
@@ -39,25 +39,35 @@ ROOT = os.path.dirname(HERE)
 TOP_K = 32
 BATCH_SIZE = 16
 SETUPS = 3
-WARM_BUILD_FILES = 200
-# the read window also runs until it has this many samples of each kind
-MIN_SINGLES = 20
-MIN_BATCHES = 3
+# the first build in a JVM pays its warm-up whatever its size, so the warm
+# build is small; it runs one block per core so that every Python worker
+# the timed build uses is already up
+WARM_BUILD_FILES = 20
+# the read window also runs until it has this many batches, and until it
+# has the workload's ``min_singles`` single searches
+MIN_BATCHES = 6
 
 WORKLOADS = {
-    # one repository under the driver-direct byte gate: zero-job searches
+    # one repository under the driver-direct byte gate: zero-job searches.
+    # 100 singles put the tail at p90 or above. A build takes under 3 s
+    # and one alone moves by a fifth between runs, so it is timed 3 times.
     "repo_direct": {
         "shape": {"docs": 500, "code_repos": 1, "files_per_repo": 3500,
                   "single_repo": "repo-00000"},
-        "blocks": 4, "commits": 2, "singles_per_batch": 8,
+        "blocks": 4, "builds": 3, "commits": 1, "singles_per_batch": 12,
+        "min_singles": 100,
     },
-    # a fleet of 4.5k repositories: every search is a Spark job
+    # a fleet of 2.25k repositories: every search is a Spark job of about
+    # 0.5 s, so the run's time budget holds 50 singles (tail at p80)
     "fleet_cluster": {
-        "shape": {"docs": 5000, "code_repos": 4500, "files_per_repo": 10},
-        "blocks": 32, "commits": 1, "singles_per_batch": 4,
+        "shape": {"docs": 2500, "code_repos": 2250, "files_per_repo": 10},
+        "blocks": 16, "builds": 1, "commits": 1, "singles_per_batch": 8,
+        "min_singles": 50,
     },
 }
 COMMIT_FRAC = 0.01
+# no-op re-commits after each commit; one alone moves by a third between runs
+NOOPS = 3
 
 INCREMENTAL_STAGES = [
     "load_index", "sha_gate_probe", "dead_checkpoint",
@@ -66,6 +76,8 @@ INCREMENTAL_STAGES = [
     "deletes_append", "corpus_stats_write", "incr_manifest_footer_metrics",
     "presence_delta", "reload_index", "phrase_df_delta",
 ]
+# the stages a commit that changes nothing may run
+NOOP_STAGES = {"load_index", "sha_gate_probe"}
 
 
 def log(*parts) -> None:
@@ -118,9 +130,14 @@ def tree_peak_rss_mb() -> tuple[float, dict]:
     return sum(by_cmd.values()), {k: round(v, 1) for k, v in sorted(by_cmd.items())}
 
 
+def dir_files(path: str) -> dict[str, int]:
+    """{relative path: size} of every file under ``path``."""
+    return {os.path.relpath(os.path.join(d, f), path): os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(path) for f in files}
+
+
 def dir_bytes(path: str) -> int:
-    return sum(os.path.getsize(os.path.join(d, f))
-               for d, _, files in os.walk(path) for f in files)
+    return sum(dir_files(path).values())
 
 
 def tail(values: list[float]) -> tuple[float, float]:
@@ -279,6 +296,7 @@ def run(args, sess: Session) -> int:
     with tracer.span("session.start"):
         spark = sess.start()
     session_start_s = time.perf_counter() - t0
+    lap("session_start")
 
     idx_dir = os.path.join(work, "index")
     corpus_df = spark.read.parquet(corpus_path)
@@ -286,17 +304,27 @@ def run(args, sess: Session) -> int:
     # Python workers, as every build after a process's first one does
     build_index(spark, corpus_df.limit(WARM_BUILD_FILES), os.path.join(work, "warm_index"),
                 num_blocks=nproc)
-    t0 = time.perf_counter()
-    with tracer.span("engine.build_index"):
-        index = build_index(spark, corpus_df, idx_dir, num_blocks=spec["blocks"])
-    build_s = time.perf_counter() - t0
+    lap("warm_build")
+    build_times = []
+    for i in range(spec["builds"]):
+        # the last build is the index the run serves; earlier ones are
+        # timed and removed
+        out = idx_dir if i == spec["builds"] - 1 else os.path.join(work, "build_probe")
+        t0 = time.perf_counter()
+        with tracer.span("engine.build_index"):
+            index = build_index(spark, corpus_df, out, num_blocks=spec["blocks"])
+        build_times.append(time.perf_counter() - t0)
+        if out != idx_dir:
+            shutil.rmtree(out)
+    build_s = statistics.median(build_times)
+    lap("build")
     hot = hot_phrases_from_query_log(warm_log)
     t0 = time.perf_counter()
     with tracer.span("phrasedf.build"):
         build_phrase_df(spark, index, hot)
     phrasedf_build_s = time.perf_counter() - t0
     postings_bytes_built = index.postings_bytes
-    lap("start_and_build")
+    lap("phrase_df")
     ctx.update(files=n_files, blocks=spec["blocks"], postings_bytes=postings_bytes_built,
                hot_phrases=len(hot))
 
@@ -330,7 +358,7 @@ def run(args, sess: Session) -> int:
     period = spec["singles_per_batch"] + 1
     t_end = time.perf_counter() + args.seconds
     n_op = 0
-    while (time.perf_counter() < t_end or len(singles) < MIN_SINGLES
+    while (time.perf_counter() < t_end or len(singles) < spec["min_singles"]
            or len(batches) < MIN_BATCHES):
         tracer.enabled = bool(args.trace) and n_op % 2 == 0
         tracer.new_op()
@@ -372,7 +400,7 @@ def run(args, sess: Session) -> int:
     read_index = index
     lap("read_checks")
 
-    # commits: each followed by a freshness search, a no-op re-commit and
+    # commits: each followed by a freshness search, no-op re-commits and
     # two stream searches
     import pandas as pd
 
@@ -413,11 +441,19 @@ def run(args, sess: Session) -> int:
             mismatches.append(f"fresh:{ch['marker']}")
         pending.append((ch["marker"], rows))
 
-        t0 = time.perf_counter()
-        with tracer.span("incremental.noop_commit"):
-            index = incremental_update(spark, idx_dir, batch_df)
-        noop.append(time.perf_counter() - t0)
-        attempted += 1
+        files_before = dir_files(idx_dir)
+        for _ in range(NOOPS):
+            noop_stages: dict = {}
+            t0 = time.perf_counter()
+            with tracer.span("incremental.noop_commit"):
+                index = incremental_update(spark, idx_dir, batch_df, stage_timings=noop_stages)
+            noop.append(time.perf_counter() - t0)
+            attempted += 1
+            # the sha gate must pass nothing: no stage past it runs and no
+            # index file is written
+            if (set(noop_stages) - NOOP_STAGES) or dir_files(idx_dir) != files_before:
+                failed += 1
+                mismatches.append(f"noop:{ch['marker']}:{sorted(noop_stages)}")
         for q in stream.take(2):
             t0 = time.perf_counter()
             rows = index.search(q, TOP_K).collect()
@@ -496,6 +532,9 @@ def main(argv=None) -> int:
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = p.parse_args(argv)
+    if sys.flags.optimize:
+        print("perfbench: the result checks need assertions; run without -O", file=sys.stderr)
+        return 2
     if not os.path.isfile(os.path.join(ROOT, "codebased_spark", "__init__.py")):
         print(f"perfbench: no engine package under {ROOT}", file=sys.stderr)
         return 2
